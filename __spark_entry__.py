@@ -1116,25 +1116,33 @@ def _q_w9_lineage(spark, sf_dir):
     # per-partition manifests); the query returns each stage's manifest
     # totals row, which the oracle recomputes as plain SQL counts — so
     # green means the lineage metrics tell the truth about the data.
+    # The stage outputs and manifests are scratch: the three totals rows
+    # are copied into a driver-local frame, then the directory goes.
+    import shutil
     import tempfile
 
     from osmptparser_spark.plans.lineage import LineageTracker
+    from osmptparser_spark.session import local_df
 
     base = tempfile.mkdtemp(prefix="osmpt_lineage_q_")
-    tr = LineageTracker(spark, base)
-    ev = _t(spark, sf_dir, "events")
-    s1 = tr.run_stage("s1_filter", lambda: ev.filter(F.col("event_type") == "click"))
-    s2 = tr.run_stage(
-        "s2_agg",
-        lambda: s1.groupBy("user_id").agg(F.count("*").alias("n_clicks")),
-    )
-    tr.run_stage(
-        "s3_top",
-        lambda: s2.filter(F.col("n_clicks") >= 3),
-    )
-    return tr.metrics().select(
-        "stage", F.col("n_rows").cast("long").alias("n_rows")
-    )
+    try:
+        tr = LineageTracker(spark, base)
+        ev = _t(spark, sf_dir, "events")
+        s1 = tr.run_stage(
+            "s1_filter", lambda: ev.filter(F.col("event_type") == "click")
+        )
+        s2 = tr.run_stage(
+            "s2_agg",
+            lambda: s1.groupBy("user_id").agg(F.count("*").alias("n_clicks")),
+        )
+        tr.run_stage(
+            "s3_top",
+            lambda: s2.filter(F.col("n_clicks") >= 3),
+        )
+        rows = tr.metrics().select("stage", "n_rows").collect()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    return local_df(spark, [tuple(r) for r in rows], "stage STRING, n_rows BIGINT")
 
 
 def _q_h3_compat(spark, sf_dir):

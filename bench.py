@@ -72,6 +72,20 @@ def _ensure_pages(spark):
     return spark.read.parquet(PAGES_CACHE)
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for this host: ``$SPARK_GRAFT_DRIVER_MEM``
+    when set, else half of MemAvailable in MiB, at least 1 GiB and at
+    most the old fixed 48 GiB. A fixed 48g heap exceeds a small host's
+    RAM, and local mode runs every task inside that one JVM."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    with open(meminfo) as f:
+        info = {ln.split(":")[0]: int(ln.split()[1]) for ln in f if ":" in ln}
+    avail_mb = info.get("MemAvailable", info["MemTotal"]) // 1024
+    return f"{max(1024, min(48 * 1024, avail_mb // 2))}m"
+
+
 def _time(fn):
     t0 = time.time()
     out = fn()
@@ -218,7 +232,7 @@ def main():
         confs={
             # fresh JVM per bench process, so driver memory is settable;
             # local mode = driver does all the work, give it real heap
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+            "spark.driver.memory": driver_memory(),
             "spark.sql.parquet.columnarReaderBatchSize": "1024",
         },
     )

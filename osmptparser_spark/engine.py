@@ -15,14 +15,12 @@ from pyspark.sql import functions as F
 
 from .functions.tagfilter import compile_tag_filter
 from .operators.hydrate import (
-    hydrate_single_ways,
     hydrate_stops,
-    hydrate_way_nodes,
     hydrated_node_rows,
     semi_join_ways,
     single_way_node_rows,
 )
-from .operators.stitch import stitch, stitch_node_rows_partitioned as stitch_node_rows
+from .operators.stitch import stitch_node_rows_partitioned as stitch_node_rows
 
 _EMPTY_GEOM = "CAST(array() AS ARRAY<ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>>)"
 _EMPTY_SEQ = "CAST(array() AS ARRAY<ARRAY<BIGINT>>)"
@@ -32,18 +30,22 @@ _EMPTY_STOPS = (
 )
 
 
-def filter_relations(relations: DataFrame, conditions: str) -> DataFrame:
-    """F1 + F3: tag-predicate filter plus drop relations with no way
-    members (mod.rs:253-257)."""
-    return relations.filter(compile_tag_filter(conditions)).filter(
-        F.size("way_refs") > 0
-    )
+def filter_relations(relations: DataFrame, conditions: str | None) -> DataFrame:
+    """F1 + F3: tag-predicate filter (skipped when ``conditions`` is
+    empty) plus drop relations with no way members (mod.rs:253-257)."""
+    keep = F.expr("size(way_refs) > 0")
+    if conditions:
+        keep = compile_tag_filter(conditions) & keep
+    return relations.where(keep)
 
 
-def filter_ways(ways: DataFrame, conditions: str) -> DataFrame:
-    """F2 + F4: tag-predicate filter plus drop ways with no node refs
-    (mod.rs:380-387)."""
-    return ways.filter(compile_tag_filter(conditions)).filter(F.size("refs") > 0)
+def filter_ways(ways: DataFrame, conditions: str | None) -> DataFrame:
+    """F2 + F4: tag-predicate filter (skipped when ``conditions`` is
+    empty) plus drop ways with no node refs (mod.rs:380-387)."""
+    keep = F.expr("size(refs) > 0")
+    if conditions:
+        keep = compile_tag_filter(conditions) & keep
+    return ways.where(keep)
 
 
 def _finalize(relations: DataFrame, stitched: DataFrame, stops: DataFrame | None):
@@ -54,18 +56,22 @@ def _finalize(relations: DataFrame, stitched: DataFrame, stops: DataFrame | None
     501 Broken + empty geometry (relation.rs:233-235) — coalesce
     reproduces that.
     """
-    out = relations.select("id", "tags", "info").join(
-        stitched.withColumnRenamed("rel_id", "id"), "id", "left"
+    out = relations.selectExpr("id AS rel_id", "tags", "info").join(
+        stitched, "rel_id", "left"
     )
+    cols = [
+        "rel_id AS id",
+        "tags",
+        "info",
+        f"coalesce(geometry, {_EMPTY_GEOM}) AS geometry",
+        f"coalesce(node_seq, {_EMPTY_SEQ}) AS node_seq",
+        "coalesce(status_code, 501) AS status_code",
+        "coalesce(status_detail, 'Broken') AS status_detail",
+    ]
     if stops is not None:
-        out = out.join(stops.withColumnRenamed("rel_id", "id"), "id", "left")
-        out = out.withColumn("stops", F.coalesce("stops", F.expr(_EMPTY_STOPS)))
-    return (
-        out.withColumn("geometry", F.coalesce("geometry", F.expr(_EMPTY_GEOM)))
-        .withColumn("node_seq", F.coalesce("node_seq", F.expr(_EMPTY_SEQ)))
-        .withColumn("status_code", F.coalesce("status_code", F.lit(501)))
-        .withColumn("status_detail", F.coalesce("status_detail", F.lit("Broken")))
-    )
+        out = out.join(stops, "rel_id", "left")
+        cols.append(f"coalesce(stops, {_EMPTY_STOPS}) AS stops")
+    return out.selectExpr(*cols)
 
 
 def _barrier(df: DataFrame, kind: str) -> DataFrame:
@@ -153,16 +159,14 @@ def areas_from_pages(
     # the relation-member semi-join re-reads ways unfiltered
     ways_all = extract_ways_sql(pages)
     nodes = extract_nodes_sql(pages)
-    rel = filter_relations(relations, conditions) if conditions else relations
-    rel = rel.filter(F.size("way_refs") > 0)
+    rel = filter_relations(relations, conditions)
 
     rel_ways = semi_join_ways(ways_all, rel)
     node_rows = hydrated_node_rows(rel, rel_ways, nodes)
     rel_areas = _finalize(rel, stitch_node_rows(node_rows, gap_m, closed=True), None)
     rel_areas = rel_areas.withColumn("id_type", F.lit("r"))
     ways_f = extract_ways_sql(pages, line_filter=pre)
-    std_ways = filter_ways(ways_f, conditions) if conditions else ways_f
-    std_ways = std_ways.filter(F.size("refs") > 0)
+    std_ways = filter_ways(ways_f, conditions)
     # same partition-level stitch shape as the route path (a single way
     # is a 1-way group keyed by its own id) — per-group applyInPandas
     # was the measured 250s->15s bottleneck shape
@@ -220,8 +224,7 @@ def get_public_transports(
     ``conditions`` optionally applies the F1 tag filter here; pass
     pre-filtered relations otherwise.
     """
-    rel = filter_relations(relations, conditions) if conditions else relations
-    rel = rel.filter(F.size("way_refs") > 0)
+    rel = filter_relations(relations, conditions)
     rel_ways = semi_join_ways(ways, rel)
     node_rows = hydrated_node_rows(rel, rel_ways, nodes)
     stitched = stitch_node_rows(node_rows, gap_m, closed=False)
@@ -239,15 +242,13 @@ def get_areas(
     """Area mode: relation areas (id_type 'r') union standalone
     filter-matched way areas (id_type 'w'), rings closed within
     tolerance (mod.rs:580-654)."""
-    rel = filter_relations(relations, conditions) if conditions else relations
-    rel = rel.filter(F.size("way_refs") > 0)
+    rel = filter_relations(relations, conditions)
     rel_ways = semi_join_ways(ways, rel)
     node_rows = hydrated_node_rows(rel, rel_ways, nodes)
     rel_areas = _finalize(rel, stitch_node_rows(node_rows, gap_m, closed=True), None)
     rel_areas = rel_areas.withColumn("id_type", F.lit("r"))
 
-    std_ways = filter_ways(ways, conditions) if conditions else ways
-    std_ways = std_ways.filter(F.size("refs") > 0)
+    std_ways = filter_ways(ways, conditions)
     single = single_way_node_rows(std_ways, nodes)
     way_areas = _finalize(
         std_ways.select("id", "tags", "info"),

@@ -3,14 +3,12 @@
 Same grammar as the reference's ``filter_relation``/``filter_way``
 (mod.rs:88-144): ``&``-separated conjunction of terms; a term is either
 ``key`` (tag-existence) or ``key=v1,v2`` (tag value IN list). A missing
-key always rejects the row. Compiled to pure Catalyst expressions
-(map getItem / isin) so predicate pushdown and whole-stage codegen
-apply — no Python in the filter path.
+key always rejects the row. Compiled to one SQL-text Catalyst
+expression (map lookup / IN) so predicate pushdown and whole-stage
+codegen apply — no Python in the filter path.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -30,20 +28,35 @@ PTV2_FILTER_STRICT = (
 AA_FILTER = "name&admin_level&boundary=administrative"
 
 
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal: backslash and quote escaped,
+    everything else (non-ASCII included) verbatim."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def compile_tag_filter(conditions: str, tags_col: str = "tags") -> Column:
     """Compile a filter string into a boolean Column over a MAP column.
 
+    Built as one SQL expression (a single Py4J call) with every key and
+    value passed as an escaped literal; ``key`` and ``key=v1,v2`` give
+    ``tags['key'] IS NOT NULL`` and ``... AND tags['key'] IN ('v1', 'v2')``.
+
     >>> df.filter(compile_tag_filter("name&route=bus,tram"))
     """
+    col = _sql_ident(tags_col)
     terms = []
     for term in conditions.split("&"):
         key, eq, values = term.partition("=")
-        tag = F.col(tags_col).getItem(key)
-        cond = tag.isNotNull()
+        tag = f"{col}[{_sql_string(key)}]"
+        terms.append(f"{tag} IS NOT NULL")
         if eq:
-            cond = cond & tag.isin(*values.split(","))
-        terms.append(cond)
-    return reduce(lambda a, b: a & b, terms)
+            vals = ", ".join(map(_sql_string, values.split(",")))
+            terms.append(f"{tag} IN ({vals})")
+    return F.expr(" AND ".join(terms))
 
 
 _SAFE_TOKEN = __import__("re").compile(r"^[A-Za-z0-9_:\- ]*$")
@@ -67,6 +80,7 @@ def line_prefilter(conditions: str, line_col: str = "line") -> Column | None:
     80k pages); this prefilter drops non-matching lines before any JSON
     parse.
     """
+    col = _sql_ident(line_col)
     terms = []
     for term in conditions.split("&"):
         key, eq, values = term.partition("=")
@@ -76,14 +90,12 @@ def line_prefilter(conditions: str, line_col: str = "line") -> Column | None:
             vals = values.split(",")
             if any(not _SAFE_TOKEN.match(v) for v in vals):
                 return None
-            cond = reduce(
-                lambda a, b: a | b,
-                [F.col(line_col).contains(f'"{key}":"{v}"') for v in vals],
-            )
+            needles = [f'"{key}":"{v}"' for v in vals]
         else:
-            cond = F.col(line_col).contains(f'"{key}":')
-        terms.append(cond)
-    return reduce(lambda a, b: a & b, terms)
+            needles = [f'"{key}":']
+        ors = " OR ".join(f"contains({col}, {_sql_string(n)})" for n in needles)
+        terms.append(f"({ors})")
+    return F.expr(" AND ".join(terms))
 
 
 def tag_filter_py(tags: dict, conditions: str) -> bool:

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 def relation_way_ids(relations: DataFrame) -> DataFrame:
     """Distinct way ids referenced by any relation (build side of J1)."""
-    return relations.select(F.explode("way_refs").alias("id")).distinct()
+    return relations.selectExpr("explode(way_refs) AS id").distinct()
 
 
 def semi_join_ways(ways: DataFrame, relations: DataFrame) -> DataFrame:
@@ -54,23 +54,16 @@ def hydrated_node_rows(
     lat, lon) rows with dangling refs dropped — no regroup shuffle; the
     stitch UDF groups by rel_id directly and rebuilds way order from
     (way_pos, node_pos). One shuffle less than hydrate_way_nodes."""
-    rel_ways = relations.select(
-        F.col("id").alias("rel_id"),
-        F.posexplode("way_refs").alias("way_pos", "way_id"),
-    ).join(
-        ways.select(F.col("id").alias("way_id"), "refs"),
-        "way_id",
-        "inner",
+    rel_ways = relations.selectExpr(
+        "id AS rel_id", "posexplode(way_refs) AS (way_pos, way_id)"
+    ).join(ways.selectExpr("id AS way_id", "refs"), "way_id", "inner")
+    return (
+        rel_ways.selectExpr(
+            "rel_id", "way_pos", "posexplode(refs) AS (node_pos, node_id)"
+        )
+        .join(nodes.selectExpr("id AS node_id", "lat", "lon"), "node_id", "inner")
+        .selectExpr("rel_id", "way_pos", "node_pos", "node_id", "lat", "lon")
     )
-    return rel_ways.select(
-        "rel_id",
-        "way_pos",
-        F.posexplode("refs").alias("node_pos", "node_id"),
-    ).join(
-        nodes.select(F.col("id").alias("node_id"), "lat", "lon"),
-        "node_id",
-        "inner",
-    ).select("rel_id", "way_pos", "node_pos", "node_id", "lat", "lon")
 
 
 def hydrate_way_nodes(
@@ -167,40 +160,21 @@ def hydrate_stops(relations: DataFrame, nodes: DataFrame) -> DataFrame:
     """Ordered stop-node hydration: one row per relation with
     stops ARRAY<STRUCT<id,lat,lon,tags>> in member order, dangling
     refs dropped (mod.rs:690-700)."""
-    stops = relations.select(
-        F.col("id").alias("rel_id"),
-        F.posexplode("stop_refs").alias("stop_pos", "node_id"),
+    stops = relations.selectExpr(
+        "id AS rel_id", "posexplode(stop_refs) AS (stop_pos, node_id)"
     ).join(
-        nodes.select(F.col("node_id"), "lat", "lon", "tags")
-        if "node_id" in nodes.columns
-        else nodes.select(F.col("id").alias("node_id"), "lat", "lon", "tags"),
-        "node_id",
-        "inner",
+        nodes.selectExpr("id AS node_id", "lat", "lon", "tags"), "node_id", "inner"
     )
     # struct contains a MAP (not orderable) -> sort with a comparator
     # on the ordinal instead of natural struct ordering
-    return (
-        stops.groupBy("rel_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("stop_pos", "node_id", "lat", "lon", "tags")
-                ),
-                lambda l, r: F.when(l["stop_pos"] < r["stop_pos"], -1)
-                .when(l["stop_pos"] > r["stop_pos"], 1)
-                .otherwise(0),
-            ).alias("s")
-        )
-        .select(
-            "rel_id",
-            F.transform(
-                "s",
-                lambda x: F.struct(
-                    x["node_id"].alias("id"),
-                    x["lat"].alias("lat"),
-                    x["lon"].alias("lon"),
-                    x["tags"].alias("tags"),
-                ),
-            ).alias("stops"),
+    return stops.groupBy("rel_id").agg(
+        F.expr(
+            "transform("
+            "array_sort("
+            "collect_list(struct(stop_pos, node_id, lat, lon, tags)), "
+            "(l, r) -> CASE WHEN l.stop_pos < r.stop_pos THEN -1 "
+            "WHEN l.stop_pos > r.stop_pos THEN 1 ELSE 0 END), "
+            "x -> struct(x.node_id AS id, x.lat AS lat, x.lon AS lon, x.tags AS tags)"
+            ") AS stops"
         )
     )

@@ -16,10 +16,12 @@ floats print with ``repr`` round-trip precision so f64 survives exactly.
 extraction recovers ``text`` from ``html`` byte-identically (the
 per-url invariant the north rule demands).
 
-Extraction is ``mapInPandas`` over Arrow batches: pandas string ops +
-batch-level comprehensions, never a per-row Spark UDF. At 100 TB scale
-this stage is embarrassingly parallel (no shuffle); entity outputs go
-straight into the semi-join/hydration pipeline.
+Extraction (``extract_*_sql``, the default) is pure Catalyst built from
+SQL text: split, ``try_cast`` and ``from_json`` inside whole-stage
+codegen, no Python. The ``mapInPandas`` extractors (``extract_nodes``
+and friends) are the reference the SQL path is tested against. At
+100 TB scale this stage is embarrassingly parallel (no shuffle); entity
+outputs go straight into the semi-join/hydration pipeline.
 """
 
 from __future__ import annotations
@@ -29,7 +31,6 @@ from datetime import datetime, timezone
 from typing import Dict, Iterable, Iterator, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 PAGE_PREFIX = "<html><body><pre>"
 PAGE_SUFFIX = "</pre></body></html>"
@@ -221,26 +222,72 @@ def extract_relations(pages: DataFrame, from_html: bool = True) -> DataFrame:
 # with a limit (pipes inside the trailing JSON survive), from_json for
 # the tag/info maps.
 #
+# Every plan here is built from SQL text: one ``where``/``selectExpr``
+# per operator. Building the same expressions as ``F.*`` Column trees
+# costs one Py4J round trip per node (plus PySpark's per-call call-site
+# capture), which made the lazy routes plan take longer to build than
+# to run at small inputs.
+#
+# Numeric fields parse with ``try_cast``: a line whose id, lat or lon
+# does not parse is dropped instead of failing the job with ANSI
+# ``CAST_INVALID_INPUT``; a member ref that does not parse becomes a
+# null element, which every downstream join drops like a dangling ref.
+#
 # One documented limitation of the SQL path: way/relation lines carry
 # TWO trailing JSON objects ('tags|info'), split on the first literal
 # '}|{' boundary — a tag VALUE containing that exact 3-byte sequence
-# would mis-split (node lines are immune: single trailing JSON). The
-# pandas path has no such limit; tests assert both paths agree on the
-# reference fixture (real OSM tags with unicode/quotes).
+# mis-splits and both maps come back null (node lines are immune:
+# single trailing JSON). The pandas path has no such limit; tests
+# assert both paths agree on the reference fixture (real OSM tags with
+# unicode/quotes).
 
 
-def _recovered_text(from_html: bool):
-    if not from_html:
-        return F.col("text")
-    return F.expr(
-        f"substring(decode(html, 'UTF-8'), {len(PAGE_PREFIX) + 1}, "
-        f"length(decode(html, 'UTF-8')) - {len(PAGE_PREFIX) + len(PAGE_SUFFIX)})"
+def _field(n_fields: int, i: int) -> str:
+    # ``get`` (not ``[]``) so a line with too few fields yields null
+    # instead of an ANSI index error; the limit keeps pipes inside the
+    # trailing JSON
+    return f"get(split(line, '\\\\|', {n_fields}), {i})"
+
+
+def _ids_expr(field: str) -> str:
+    return (
+        f"CASE WHEN {field} = '' THEN CAST(array() AS ARRAY<BIGINT>) "
+        f"ELSE transform(split({field}, ','), v -> try_cast(v AS BIGINT)) END"
     )
 
 
-def _lines(
-    pages: DataFrame, from_html: bool, prefix: str, line_filter=None
+def _json_map(field: str) -> str:
+    """map<string,string> from a canonical-JSON field, with a fast
+    path for the ubiquitous empty object: ``from_json('{}')`` and
+    ``map()`` are the same value, and most entity lines carry no tags,
+    so skipping the Jackson parse for the literal ``{}`` removes the
+    per-line parser cost without changing any result."""
+    return (
+        f"CASE WHEN {field} = '{{}}' THEN map() "
+        f"ELSE from_json({field}, 'map<string,string>') END"
+    )
+
+
+def _json_pair(rest: str) -> tuple[str, str]:
+    """Split 'tags_json|info_json' on the first '}|{' boundary."""
+    cut = f"instr({rest}, '}}|{{')"
+    return (
+        _json_map(f"substring({rest}, 1, {cut})"),
+        _json_map(f"substr({rest}, {cut} + 2)"),
+    )
+
+
+def _extract(
+    pages: DataFrame,
+    from_html: bool,
+    prefix: str,
+    line_filter,
+    fields: Dict[str, str],
+    required: List[str],
 ) -> DataFrame:
+    """One row per line starting with ``prefix`` whose ``required``
+    fields parse: a projection of ``fields`` (name -> SQL expression
+    over ``line``)."""
     # Sound page-level prefilter (round 6): a page with ANY matching
     # line necessarily contains the prefix bytes in its raw payload, so
     # non-matching pages are dropped BEFORE the decode+split+explode
@@ -249,84 +296,64 @@ def _lines(
     # pages instead of the whole corpus; may only over-select (the
     # exact per-line startswith below is unchanged).
     if from_html:
-        pages = pages.filter(F.contains("html", F.lit(prefix.encode("utf-8"))))
+        pages = pages.where(f"contains(html, X'{prefix.encode('utf-8').hex()}')")
+        text = (
+            f"substring(decode(html, 'UTF-8'), {len(PAGE_PREFIX) + 1}, "
+            f"length(decode(html, 'UTF-8')) - {len(PAGE_PREFIX) + len(PAGE_SUFFIX)})"
+        )
     else:
-        pages = pages.filter(F.contains("text", F.lit(prefix)))
-    df = pages.select(
-        F.explode(F.split(_recovered_text(from_html), "\n")).alias("line")
-    ).filter(F.col("line").startswith(prefix))
+        pages = pages.where(f"contains(text, '{prefix}')")
+        text = "text"
+    lines = pages.selectExpr(f"explode(split({text}, '\\n')) AS line")
     if line_filter is not None:
         # sound string prefilter (tagfilter.line_prefilter): drops lines
         # before any from_json parse; exact map filter re-applied later
-        df = df.filter(line_filter)
-    return df
-
-
-def _ids_expr(col):
-    return F.when(col == "", F.array().cast("array<bigint>")).otherwise(
-        F.transform(F.split(col, ","), lambda x: x.cast("bigint"))
+        lines = lines.where(line_filter)
+    parsed = " AND ".join(f"{fields[f]} IS NOT NULL" for f in required)
+    return lines.where(f"startswith(line, '{prefix}') AND {parsed}").selectExpr(
+        *(f"{e} AS {name}" for name, e in fields.items())
     )
-
-
-def _json_map(col):
-    """map<string,string> from a canonical-JSON column, with a fast
-    path for the ubiquitous empty object: ``from_json('{}')`` and
-    ``map()`` are the same value, and most entity lines carry no tags,
-    so skipping the Jackson parse for the literal ``{}`` removes the
-    per-line parser cost without changing any result."""
-    return F.when(col == "{}", F.expr("map()")).otherwise(
-        F.from_json(col, "map<string,string>")
-    )
-
-
-def _json_pair(rest):
-    """Split 'tags_json|info_json' on the first '}|{' boundary."""
-    cut = F.instr(rest, "}|{")
-    tags = _json_map(F.substring(rest, F.lit(1), cut))
-    info = _json_map(F.substr(rest, cut + F.lit(2)))
-    return tags, info
 
 
 def extract_nodes_sql(
     pages: DataFrame, from_html: bool = True, line_filter=None
 ) -> DataFrame:
-    lines = _lines(pages, from_html, "OSMNODE|", line_filter)
-    p = F.split("line", r"\|", 5)  # limit: tags JSON may contain pipes
-    return lines.select(
-        F.get(p, 1).cast("bigint").alias("id"),
-        F.get(p, 2).cast("double").alias("lat"),
-        F.get(p, 3).cast("double").alias("lon"),
-        _json_map(F.get(p, 4)).alias("tags"),
+    fields = {
+        "id": f"try_cast({_field(5, 1)} AS BIGINT)",
+        "lat": f"try_cast({_field(5, 2)} AS DOUBLE)",
+        "lon": f"try_cast({_field(5, 3)} AS DOUBLE)",
+        "tags": _json_map(_field(5, 4)),
+    }
+    return _extract(
+        pages, from_html, "OSMNODE|", line_filter, fields, ["id", "lat", "lon"]
     )
 
 
 def extract_ways_sql(
     pages: DataFrame, from_html: bool = True, line_filter=None
 ) -> DataFrame:
-    lines = _lines(pages, from_html, "OSMWAY|", line_filter)
-    p = F.split("line", r"\|", 4)
-    tags, info = _json_pair(F.get(p, 3))
-    return lines.select(
-        F.get(p, 1).cast("bigint").alias("id"),
-        tags.alias("tags"),
-        info.alias("info"),
-        _ids_expr(F.get(p, 2)).alias("refs"),
-    )
+    tags, info = _json_pair(_field(4, 3))
+    fields = {
+        "id": f"try_cast({_field(4, 1)} AS BIGINT)",
+        "tags": tags,
+        "info": info,
+        "refs": _ids_expr(_field(4, 2)),
+    }
+    return _extract(pages, from_html, "OSMWAY|", line_filter, fields, ["id"])
 
 
 def extract_relations_sql(
     pages: DataFrame, from_html: bool = True, line_filter=None
 ) -> DataFrame:
-    lines = _lines(pages, from_html, "OSMREL|", line_filter)
-    p = F.split("line", r"\|", 5)
-    tags, info = _json_pair(F.get(p, 4))
-    return lines.select(
-        F.get(p, 1).cast("bigint").alias("id"),
-        tags.alias("tags"),
-        info.alias("info"),
-        _ids_expr(F.get(p, 2)).alias("way_refs"),
-        _ids_expr(F.get(p, 3)).alias("stop_refs"),
-    )
+    tags, info = _json_pair(_field(5, 4))
+    fields = {
+        "id": f"try_cast({_field(5, 1)} AS BIGINT)",
+        "tags": tags,
+        "info": info,
+        "way_refs": _ids_expr(_field(5, 2)),
+        "stop_refs": _ids_expr(_field(5, 3)),
+    }
+    return _extract(pages, from_html, "OSMREL|", line_filter, fields, ["id"])
 
 
 def extract_all(pages: DataFrame, from_html: bool = True, engine: str = "sql"):

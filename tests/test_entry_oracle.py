@@ -126,3 +126,16 @@ def test_simhash_oracle_is_a_real_recomputation(duck):
             for b in buf:
                 acc = acc * B + np.uint64(b)
         assert int(acc) == int(h0), tok
+
+
+def test_w9_lineage_leaves_no_scratch_dir(spark):
+    # the query's stage outputs and manifests are scratch; the returned
+    # frame must not read them, so the directory can go
+    import glob
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "osmpt_lineage_q_*")
+    before = set(glob.glob(pattern))
+    rows = entry_mod.queries()["w9_lineage"](spark, SF_DIR).collect()
+    assert sorted(r.stage for r in rows) == ["s1_filter", "s2_agg", "s3_top"]
+    assert set(glob.glob(pattern)) == before

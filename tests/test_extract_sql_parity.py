@@ -51,3 +51,47 @@ def test_pandas_path_handles_pipes_in_way_tags(spark):
         assert dict(row.tags) == {"note": "x|y"}
         assert dict(row.info) == {"k": "1"}
         assert list(row.refs) == [1, 2]
+
+
+def _page(text):
+    html = (P.PAGE_PREFIX + text + P.PAGE_SUFFIX).encode("utf-8")
+    return ("https://fixture.test/bad/0", P._EPOCH, html, text, "en")
+
+
+@pytest.mark.parametrize("from_html", [True, False])
+def test_sql_drops_lines_with_malformed_numbers(spark, from_html):
+    # Spark 4 runs ANSI casts: one bad numeric field used to fail the
+    # whole job with CAST_INVALID_INPUT. Bad ids and coordinates now
+    # drop their line; a bad member ref is a null element, which the
+    # hydration joins drop like a dangling ref.
+    text = "\n".join(
+        [
+            "GEOPAGE|0|mixed|9",
+            'OSMNODE|1|1.5|2.5|{"k":"v"}',
+            "OSMNODE|x1|1.5|2.5|{}",
+            "OSMNODE|2|abc|2.5|{}",
+            "OSMNODE|3|1.5||{}",
+            "OSMNODE|4",
+            "OSMNODE|5|-0.25|3e2|{}",
+            'OSMWAY|7|1,5|{}|{"version":"2"}',
+            "OSMWAY|7x|1,5|{}|{}",
+            "OSMWAY|8|1,q,5|{}|{}",
+            'OSMREL|9|7|1|{"name":"r"}|{}',
+            "OSMREL||7|1|{}|{}",
+        ]
+    )
+    pages = P.pages_df(spark, [_page(text)])
+    nodes = _rows(P.extract_nodes_sql(pages, from_html))
+    assert nodes == [
+        {"id": 1, "lat": 1.5, "lon": 2.5, "tags": {"k": "v"}},
+        {"id": 5, "lat": -0.25, "lon": 300.0, "tags": {}},
+    ]
+    ways = _rows(P.extract_ways_sql(pages, from_html))
+    assert ways == [
+        {"id": 7, "tags": {}, "info": {"version": "2"}, "refs": [1, 5]},
+        {"id": 8, "tags": {}, "info": {}, "refs": [1, None, 5]},
+    ]
+    rels = _rows(P.extract_relations_sql(pages, from_html))
+    assert rels == [
+        {"id": 9, "tags": {"name": "r"}, "info": {}, "way_refs": [7], "stop_refs": [1]}
+    ]

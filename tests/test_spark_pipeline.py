@@ -82,6 +82,38 @@ class TestTagFilter:
             assert spark_ids == py_ids, cond
 
 
+    def test_escaping_matches_python_reference(self, spark):
+        # filter strings come from the CLI: keys and values reach the SQL
+        # text as escaped literals, so quotes, backslashes, backticks and
+        # non-ASCII text must filter exactly like the Python reference
+        from osmptparser_spark.functions.tagfilter import (
+            line_prefilter,
+            tag_filter_py,
+        )
+        from osmptparser_spark.sources.pages import canonical_json
+
+        odd = ["it's", "back\\slash", "a\\'b", "tick`s", 'say "hi"', "two words",
+               "Línea 5", "東京", "\\u0041", "100%_"]
+        tag_rows = [{"name": v, odd[i - 1]: "x"} for i, v in enumerate(odd)]
+        tag_rows += [{"route": v} for v in odd] + [{}, {"name": ""}]
+        df = spark.createDataFrame(
+            [(i, t, canonical_json(t)) for i, t in enumerate(tag_rows)],
+            "id INT, tags MAP<STRING,STRING>, line STRING",
+        )
+        conds = [f"name={v}" for v in odd] + [f"{k}" for k in odd]
+        conds += [f"name&{odd[2]}", f"route={odd[0]},{odd[6]},{odd[7]}", "name="]
+        for cond in conds:
+            want = {i for i, t in enumerate(tag_rows) if tag_filter_py(t, cond)}
+            got = {r.id for r in df.where(compile_tag_filter(cond)).collect()}
+            assert got == want, cond
+            pre = line_prefilter(cond)
+            safe = all(c.isascii() and (c.isalnum() or c in "_:- &=,") for c in cond)
+            assert (pre is not None) == safe, cond
+            if pre is not None:
+                # sound: never drops a line the exact filter keeps
+                assert want <= {r.id for r in df.where(pre).collect()}, cond
+
+
 class TestAreas:
     def test_relation_areas_and_way_areas(self, entity_dfs):
         nodes, ways, relations = entity_dfs
