@@ -635,14 +635,12 @@ def _q_s2_tiling(spark, sf_dir):
 def _q_stitch_pipeline(spark, sf_dir):
     # G1-G9 + J1-J3 + F1 end-to-end on a deterministic synthetic city:
     # per-status route counts (goldens asserted in tests/test_synth.py).
-    from osmptparser_spark.engine import get_public_transports
+    from osmptparser_spark.engine import routes_from_pages
     from osmptparser_spark.functions.tagfilter import PTV2_FILTER
-    from osmptparser_spark.sources.pages import extract_all
     from osmptparser_spark.sources.synth import synth_pages_spark
 
     pages = synth_pages_spark(spark, n_routes=200, routes_per_task=50)
-    nodes, ways, relations = extract_all(pages)
-    pts = get_public_transports(nodes, ways, relations, 150.0, PTV2_FILTER)
+    pts = routes_from_pages(pages, 150.0, PTV2_FILTER)
     return pts.groupBy(
         F.col("status_code").cast("long").alias("status_code"), "status_detail"
     ).agg(

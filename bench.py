@@ -446,16 +446,19 @@ def main():
         ),
         "detail": os.path.basename(detail_path),
     }
-    line = json.dumps(summary)
-    if len(line) > 1900:  # hard driver-tail guard: drop to bare headline
-        line = json.dumps({
-            "metric": detail["metric"], "value": detail["value"],
-            "unit": "sec", "sf": SF, "pages": n_pages,
-            "geo_clean": detail["geo_clean"],
-            "detail": os.path.basename(detail_path),
-        })
-    print(line)
+    print(summary_line(summary))
     return 0
+
+
+def summary_line(summary: dict) -> str:
+    """The final stdout line: the whole summary, or, past 1900 chars
+    (only the last ~2,000 chars of stdout are kept), the bare headline
+    plus the per-query seconds."""
+    line = json.dumps(summary)
+    if len(line) > 1900:
+        keys = ["metric", "value", "unit", "sf", "pages", "geo_clean", "detail", "queries"]
+        line = json.dumps({k: summary[k] for k in keys})
+    return line
 
 
 if __name__ == "__main__":

@@ -13,14 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .functions.tagfilter import compile_tag_filter
+from .functions.tagfilter import compile_tag_filter, line_prefilter
 from .operators.hydrate import (
     hydrate_stops,
     hydrated_node_rows,
     semi_join_ways,
     single_way_node_rows,
 )
-from .operators.stitch import stitch_node_rows_partitioned as stitch_node_rows
+from .operators.stitch import stitch_node_rows_partitioned
+from .sources.pages import extract_nodes_sql, extract_relations_sql, extract_ways_sql
 
 _EMPTY_GEOM = "CAST(array() AS ARRAY<ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>>)"
 _EMPTY_SEQ = "CAST(array() AS ARRAY<ARRAY<BIGINT>>)"
@@ -74,113 +75,44 @@ def _finalize(relations: DataFrame, stitched: DataFrame, stops: DataFrame | None
     return out.selectExpr(*cols)
 
 
-def _barrier(df: DataFrame, kind: str) -> DataFrame:
-    """Materialization barrier for the prefiltered relation table.
+def _extract_pages(pages: DataFrame, conditions: str | None):
+    """The pages preamble of both modes: (nodes, ways, relations, line
+    prefilter).
 
-    MEMORY CONTRACT: what is materialized is the PREFILTERED relation
-    table — O(filter-matched relations), never O(pages) — so the
-    executor-memory cost is the filtered dimension table, typically
-    10^3-10^6 rows even at web scale (tests assert the measured cache
-    size; see test_spark_pipeline.py::test_cache_barrier_contract).
-
-    * ``"cache"`` (default): storage-level MEMORY; fastest, and the
-      size is observable via the storage registry.
-    * ``"localCheckpoint"``: executor-local checkpoint (memory+disk,
-      lineage truncated) — the constrained-memory deploy choice; lazy,
-      so plan-building stays side-effect free. INCOMPATIBLE with the
-      ``cluster`` profile's ``spark.dynamicAllocation.enabled``: local
-      checkpoint blocks live only on the executors that wrote them, so
-      a decommissioned executor silently destroys them mid-job (Spark's
-      own docs warn against the combination). Under dynamic allocation
-      use ``"cache"`` (recomputable lineage survives executor loss) or
-      a reliable ``df.checkpoint()`` with a checkpoint dir, or raise
-      ``spark.dynamicAllocation.cachedExecutorIdleTimeout`` so holders
-      are never reclaimed.
-    * ``"none"``: no barrier — ONLY for plans where the caller
-      guarantees the exact map filter is cheap, because without the
-      barrier Catalyst merges the exact from_json filter into the
-      line-scan predicate and evaluates it for EVERY line before the
-      cheap string conjuncts can reject it (measured: 240 s -> ~20 s
-      on 80k pages at local[16]).
+    The tag filter is pushed down as a string prefilter on raw relation
+    lines (sound: may only over-select; the exact map filter runs after
+    parsing). The prefiltered relation table is cached: it has three
+    consumers, and the cache is a pushdown barrier — without it Catalyst
+    merges the exact ``from_json`` filter into the line-scan predicate
+    and evaluates it on every line before the cheap string conjuncts
+    can reject it (measured: 240 s -> ~20 s on 80k pages at local[16]).
+    What is cached is O(filter-matched relations), never O(pages)
+    (asserted by test_spark_pipeline.py::TestCacheBarrierContract).
     """
-    if kind == "cache":
-        return df.cache()
-    if kind == "localCheckpoint":
-        return df.localCheckpoint(eager=False)
-    if kind == "none":
-        return df
-    raise ValueError(f"unknown barrier {kind!r}")
+    pre = line_prefilter(conditions) if conditions else None
+    relations = extract_relations_sql(pages, line_filter=pre).cache()
+    return extract_nodes_sql(pages), extract_ways_sql(pages), relations, pre
 
 
 def routes_from_pages(
-    pages: DataFrame,
-    gap_m: float = 150.0,
-    conditions: str | None = None,
-    barrier: str = "cache",
+    pages: DataFrame, gap_m: float = 150.0, conditions: str | None = None
 ) -> DataFrame:
-    """pages -> extract -> filter -> stitch, with the tag filter pushed
-    down as a string prefilter on raw relation lines (sound: may only
-    over-select; the exact map filter runs after parsing). Avoids the
-    from_json-in-predicate storm over every line. ``barrier`` picks the
-    materialization barrier for the prefiltered relations (see
-    :func:`_barrier` for the memory contract)."""
-    from .functions.tagfilter import line_prefilter
-    from .sources.pages import (
-        extract_nodes_sql,
-        extract_relations_sql,
-        extract_ways_sql,
-    )
-
-    pre = line_prefilter(conditions) if conditions else None
-    # barrier = reuse (three consumers) + pushdown barrier (_barrier)
-    relations = _barrier(extract_relations_sql(pages, line_filter=pre), barrier)
-    ways = extract_ways_sql(pages)
-    nodes = extract_nodes_sql(pages)
+    """:func:`get_public_transports` over a pages table."""
+    nodes, ways, relations, _ = _extract_pages(pages, conditions)
     return get_public_transports(nodes, ways, relations, gap_m, conditions)
 
 
 def areas_from_pages(
-    pages: DataFrame,
-    gap_m: float = 150.0,
-    conditions: str | None = None,
-    barrier: str = "cache",
+    pages: DataFrame, gap_m: float = 150.0, conditions: str | None = None
 ) -> DataFrame:
-    from .functions.tagfilter import line_prefilter
-    from .sources.pages import (
-        extract_nodes_sql,
-        extract_relations_sql,
-        extract_ways_sql,
+    """:func:`get_areas` over a pages table. The way branch reads way
+    lines through the same prefilter; the relation-member semi-join
+    reads them unfiltered."""
+    nodes, ways, relations, pre = _extract_pages(pages, conditions)
+    return _areas(
+        nodes, ways, relations, gap_m, conditions,
+        extract_ways_sql(pages, line_filter=pre),
     )
-
-    pre = line_prefilter(conditions) if conditions else None
-    # barrier = reuse + pushdown barrier (see routes_from_pages)
-    relations = _barrier(extract_relations_sql(pages, line_filter=pre), barrier)
-    # way branch needs the tag filter too -> same prefilter on way lines;
-    # the relation-member semi-join re-reads ways unfiltered
-    ways_all = extract_ways_sql(pages)
-    nodes = extract_nodes_sql(pages)
-    rel = filter_relations(relations, conditions)
-
-    rel_ways = semi_join_ways(ways_all, rel)
-    node_rows = hydrated_node_rows(rel, rel_ways, nodes)
-    rel_areas = _finalize(rel, stitch_node_rows(node_rows, gap_m, closed=True), None)
-    rel_areas = rel_areas.withColumn("id_type", F.lit("r"))
-    ways_f = extract_ways_sql(pages, line_filter=pre)
-    std_ways = filter_ways(ways_f, conditions)
-    # same partition-level stitch shape as the route path (a single way
-    # is a 1-way group keyed by its own id) — per-group applyInPandas
-    # was the measured 250s->15s bottleneck shape
-    single = single_way_node_rows(std_ways, nodes)
-    way_areas = _finalize(
-        std_ways.select("id", "tags", "info"),
-        stitch_node_rows(single, gap_m, closed=True),
-        None,
-    ).withColumn("id_type", F.lit("w"))
-    cols = [
-        "id", "id_type", "tags", "info", "geometry", "node_seq",
-        "status_code", "status_detail",
-    ]
-    return rel_areas.select(*cols).unionByName(way_areas.select(*cols))
 
 
 def par_map(df: DataFrame, fn, schema: str) -> DataFrame:
@@ -227,7 +159,7 @@ def get_public_transports(
     rel = filter_relations(relations, conditions)
     rel_ways = semi_join_ways(ways, rel)
     node_rows = hydrated_node_rows(rel, rel_ways, nodes)
-    stitched = stitch_node_rows(node_rows, gap_m, closed=False)
+    stitched = stitch_node_rows_partitioned(node_rows, gap_m, closed=False)
     stops = hydrate_stops(rel, nodes)
     return _finalize(rel, stitched, stops)
 
@@ -242,19 +174,26 @@ def get_areas(
     """Area mode: relation areas (id_type 'r') union standalone
     filter-matched way areas (id_type 'w'), rings closed within
     tolerance (mod.rs:580-654)."""
+    return _areas(nodes, ways, relations, gap_m, conditions, ways)
+
+
+def _areas(nodes, ways, relations, gap_m, conditions, way_candidates):
+    """Area pipeline body; ``way_candidates`` feed the standalone way
+    branch (all ways, or the line-prefiltered ways of a pages table)."""
     rel = filter_relations(relations, conditions)
-    rel_ways = semi_join_ways(ways, rel)
-    node_rows = hydrated_node_rows(rel, rel_ways, nodes)
-    rel_areas = _finalize(rel, stitch_node_rows(node_rows, gap_m, closed=True), None)
-    rel_areas = rel_areas.withColumn("id_type", F.lit("r"))
-
-    std_ways = filter_ways(ways, conditions)
-    single = single_way_node_rows(std_ways, nodes)
+    node_rows = hydrated_node_rows(rel, semi_join_ways(ways, rel), nodes)
+    rel_areas = _finalize(
+        rel, stitch_node_rows_partitioned(node_rows, gap_m, closed=True), None
+    )
+    std_ways = filter_ways(way_candidates, conditions)
     way_areas = _finalize(
-        std_ways.select("id", "tags", "info"),
-        stitch_node_rows(single, gap_m, closed=True),
+        std_ways,
+        stitch_node_rows_partitioned(
+            single_way_node_rows(std_ways, nodes), gap_m, closed=True
+        ),
         None,
-    ).withColumn("id_type", F.lit("w"))
-
-    cols = ["id", "id_type", "tags", "info", "geometry", "node_seq", "status_code", "status_detail"]
-    return rel_areas.select(*cols).unionByName(way_areas.select(*cols))
+    )
+    cols = ["tags", "info", "geometry", "node_seq", "status_code", "status_detail"]
+    return rel_areas.selectExpr("id", "'r' AS id_type", *cols).unionByName(
+        way_areas.selectExpr("id", "'w' AS id_type", *cols)
+    )

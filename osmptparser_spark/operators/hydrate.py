@@ -1,20 +1,24 @@
-"""Semi-joins (J1/J2) and order-preserving relation hydration (J3).
+"""Semi-join (J1) and order-preserving hydration (J3).
 
 The reference builds global id-sets behind RwLocks across three file
 passes (mod.rs:178-179) and probes hash maps per ref (mod.rs:664-702).
 Spark-first equivalents:
 
-* J1/J2 are LEFT SEMI joins on exploded member-id sets. Catalyst picks
-  broadcast-hash when the distinct id set is small and falls back to
-  shuffle semi-join (+ runtime Bloom filter pushdown) at scale — the
+* J1 is a LEFT SEMI join on the exploded member-way id set. Catalyst
+  picks broadcast-hash when the distinct id set is small and falls back
+  to shuffle semi-join (+ runtime Bloom filter pushdown) at scale — the
   same cascaded filter effect as the reference's 3-pass scan, without
-  re-reading the source.
+  re-reading the source. Nodes need no semi-join of their own (J2): the
+  inner node joins below already drop every node nothing references.
 * J3 (hydration) preserves member order without per-row Python:
-  ``posexplode`` keeps the ordinal, inner joins drop dangling refs
-  (mod.rs:672,680 semantics), and ``array_sort(collect_list(struct(pos,
-  ...)))`` regroups in order. This groupBy is the one wide shuffle of
-  the core pipeline; it shuffles only (rel_id, pos, id, lat, lon)
-  tuples — a few dozen bytes per node ref.
+  ``posexplode`` keeps the ordinals and inner joins drop dangling refs
+  (mod.rs:672,680 semantics). Way geometry stays flat — one row per
+  (rel_id, way_pos, node_pos) — and the partition-level stitch rebuilds
+  member order from the ordinals, so hydration adds no regroup shuffle.
+  Stops regroup per relation in ``hydrate_stops``.
+
+Every plan here is built from SQL text (``selectExpr``), one Py4J
+round trip per operator.
 """
 
 from __future__ import annotations
@@ -33,126 +37,41 @@ def semi_join_ways(ways: DataFrame, relations: DataFrame) -> DataFrame:
     return ways.join(relation_way_ids(relations), "id", "left_semi")
 
 
-def referenced_node_ids(relations: DataFrame, rel_ways: DataFrame) -> DataFrame:
-    """J2 build side: stop-node ids union way-node ids, distinct."""
-    stop_ids = relations.select(F.explode("stop_refs").alias("id"))
-    way_node_ids = rel_ways.select(F.explode("refs").alias("id"))
-    return stop_ids.unionByName(way_node_ids).distinct()
-
-
-def semi_join_nodes(
-    nodes: DataFrame, relations: DataFrame, rel_ways: DataFrame
-) -> DataFrame:
-    """J2: keep only nodes referenced by surviving relations/ways."""
-    return nodes.join(referenced_node_ids(relations, rel_ways), "id", "left_semi")
+def _with_coords(node_refs: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(rel_id, way_pos, node_pos, node_id) refs -> the stitch input rows
+    (the same plus lat, lon); the inner join drops dangling node refs."""
+    return node_refs.join(
+        nodes.selectExpr("id AS node_id", "lat", "lon"), "node_id", "inner"
+    ).selectExpr("rel_id", "way_pos", "node_pos", "node_id", "lat", "lon")
 
 
 def hydrated_node_rows(
     relations: DataFrame, ways: DataFrame, nodes: DataFrame
 ) -> DataFrame:
-    """J3, fused form: the exploded (rel_id, way_pos, node_pos, node_id,
-    lat, lon) rows with dangling refs dropped — no regroup shuffle; the
-    stitch UDF groups by rel_id directly and rebuilds way order from
-    (way_pos, node_pos). One shuffle less than hydrate_way_nodes."""
+    """J3 for relations: the exploded (rel_id, way_pos, node_pos,
+    node_id, lat, lon) rows of every member way, dangling way and node
+    refs dropped."""
     rel_ways = relations.selectExpr(
         "id AS rel_id", "posexplode(way_refs) AS (way_pos, way_id)"
     ).join(ways.selectExpr("id AS way_id", "refs"), "way_id", "inner")
-    return (
+    return _with_coords(
         rel_ways.selectExpr(
             "rel_id", "way_pos", "posexplode(refs) AS (node_pos, node_id)"
-        )
-        .join(nodes.selectExpr("id AS node_id", "lat", "lon"), "node_id", "inner")
-        .selectExpr("rel_id", "way_pos", "node_pos", "node_id", "lat", "lon")
-    )
-
-
-def hydrate_way_nodes(
-    relations: DataFrame, ways: DataFrame, nodes: DataFrame
-) -> DataFrame:
-    """J3: one row per (rel_id, way_pos) with ordered node id/lat/lon arrays.
-
-    Inner joins implement the reference's drop-dangling-refs semantics;
-    member ways whose refs ALL dangle simply produce no row (the
-    reference would panic on them inside first_pass — SURVEY §2.1
-    quirk 7 — so dropping is the documented divergence).
-    """
-    rel_ways = relations.select(
-        F.col("id").alias("rel_id"),
-        F.posexplode("way_refs").alias("way_pos", "way_id"),
-    ).join(
-        ways.select(F.col("id").alias("way_id"), "refs"),
-        "way_id",
-        "inner",
-    )
-    way_nodes = rel_ways.select(
-        "rel_id",
-        "way_pos",
-        F.posexplode("refs").alias("node_pos", "node_id"),
-    ).join(
-        nodes.select(F.col("id").alias("node_id"), "lat", "lon"),
-        "node_id",
-        "inner",
-    )
-    return (
-        way_nodes.groupBy("rel_id", "way_pos")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("node_pos", "node_id", "lat", "lon"))
-            ).alias("nds")
-        )
-        .select(
-            "rel_id",
-            "way_pos",
-            F.transform("nds", lambda x: x["node_id"]).alias("node_ids"),
-            F.transform("nds", lambda x: x["lat"]).alias("lats"),
-            F.transform("nds", lambda x: x["lon"]).alias("lons"),
-        )
+        ),
+        nodes,
     )
 
 
 def single_way_node_rows(ways: DataFrame, nodes: DataFrame) -> DataFrame:
-    """Flat (rel_id=way id, way_pos=0, node_pos, node_id, lat, lon) rows
-    for standalone filter-matched ways (area branch, mod.rs:596-647) —
-    the input shape of ``stitch_node_rows_partitioned``. Replaces the
-    hydrate_single_ways + per-group stitch() shape on the hot path:
-    no regroup shuffle here, one partition-level Arrow pass there."""
-    return ways.select(
-        F.col("id").alias("rel_id"),
-        F.lit(0).alias("way_pos"),
-        F.posexplode("refs").alias("node_pos", "node_id"),
-    ).join(
-        nodes.select(F.col("id").alias("node_id"), "lat", "lon"),
-        "node_id",
-        "inner",
-    ).select("rel_id", "way_pos", "node_pos", "node_id", "lat", "lon")
-
-
-def hydrate_single_ways(ways: DataFrame, nodes: DataFrame) -> DataFrame:
-    """J3 for standalone filter-matched ways (area branch, mod.rs:596-647):
-    each way is its own stitch group keyed by way id."""
-    way_nodes = ways.select(
-        F.col("id").alias("rel_id"),
-        F.lit(0).alias("way_pos"),
-        F.posexplode("refs").alias("node_pos", "node_id"),
-    ).join(
-        nodes.select(F.col("id").alias("node_id"), "lat", "lon"),
-        "node_id",
-        "inner",
-    )
-    return (
-        way_nodes.groupBy("rel_id", "way_pos")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("node_pos", "node_id", "lat", "lon"))
-            ).alias("nds")
-        )
-        .select(
-            "rel_id",
-            "way_pos",
-            F.transform("nds", lambda x: x["node_id"]).alias("node_ids"),
-            F.transform("nds", lambda x: x["lat"]).alias("lats"),
-            F.transform("nds", lambda x: x["lon"]).alias("lons"),
-        )
+    """J3 for standalone filter-matched ways (area branch,
+    mod.rs:596-647): the same rows as :func:`hydrated_node_rows`, each
+    way a one-member group keyed by its own id (rel_id = way id,
+    way_pos = 0)."""
+    return _with_coords(
+        ways.selectExpr(
+            "id AS rel_id", "0 AS way_pos", "posexplode(refs) AS (node_pos, node_id)"
+        ),
+        nodes,
     )
 
 

@@ -63,11 +63,10 @@ PROFILE_CONFS = {
         "spark.sql.autoBroadcastJoinThreshold": "64m",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
         # elastic executor pool without an external shuffle service.
-        # NOTE: with dynamic allocation on, engine._barrier's
-        # "localCheckpoint" mode is unsafe (blocks die with reclaimed
-        # executors — see _barrier docstring); keep barrier="cache"
-        # on this profile. cachedExecutorIdleTimeout makes executors
-        # holding cached blocks ineligible for reclaim within 1h.
+        # The *_from_pages relation table is a .cache() (recomputable
+        # lineage survives a reclaimed executor; a localCheckpoint would
+        # not), and cachedExecutorIdleTimeout makes executors holding
+        # cached blocks ineligible for reclaim within 1h.
         "spark.dynamicAllocation.enabled": "true",
         "spark.dynamicAllocation.shuffleTracking.enabled": "true",
         "spark.dynamicAllocation.cachedExecutorIdleTimeout": "3600s",

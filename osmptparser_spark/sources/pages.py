@@ -16,12 +16,13 @@ floats print with ``repr`` round-trip precision so f64 survives exactly.
 extraction recovers ``text`` from ``html`` byte-identically (the
 per-url invariant the north rule demands).
 
-Extraction (``extract_*_sql``, the default) is pure Catalyst built from
-SQL text: split, ``try_cast`` and ``from_json`` inside whole-stage
-codegen, no Python. The ``mapInPandas`` extractors (``extract_nodes``
-and friends) are the reference the SQL path is tested against. At
-100 TB scale this stage is embarrassingly parallel (no shuffle); entity
-outputs go straight into the semi-join/hydration pipeline.
+Extraction (``extract_*_sql``, all three from ``extract_all``) is the
+engine's one extractor: pure Catalyst built from SQL text — split,
+``try_cast`` and ``from_json`` inside whole-stage codegen, no Python.
+The ``mapInPandas`` extractors (``extract_nodes`` and friends) are only
+the reference the SQL path is tested against. At 100 TB scale this
+stage is embarrassingly parallel (no shuffle); entity outputs go
+straight into the semi-join/hydration pipeline.
 """
 
 from __future__ import annotations
@@ -233,13 +234,10 @@ def extract_relations(pages: DataFrame, from_html: bool = True) -> DataFrame:
 # ``CAST_INVALID_INPUT``; a member ref that does not parse becomes a
 # null element, which every downstream join drops like a dangling ref.
 #
-# One documented limitation of the SQL path: way/relation lines carry
-# TWO trailing JSON objects ('tags|info'), split on the first literal
-# '}|{' boundary — a tag VALUE containing that exact 3-byte sequence
-# mis-splits and both maps come back null (node lines are immune:
-# single trailing JSON). The pandas path has no such limit; tests
-# assert both paths agree on the reference fixture (real OSM tags with
-# unicode/quotes).
+# Way/relation lines carry TWO trailing JSON objects ('tags|info'),
+# split at the '}|{' boundary between them (``_json_pair``), which
+# stays exact when a key or value holds that sequence too (node lines
+# carry a single trailing JSON object).
 
 
 def _field(n_fields: int, i: int) -> str:
@@ -269,11 +267,33 @@ def _json_map(field: str) -> str:
 
 
 def _json_pair(rest: str) -> tuple[str, str]:
-    """Split 'tags_json|info_json' on the first '}|{' boundary."""
+    """Split 'tags_json|info_json' at the '}|{' boundary between them.
+
+    A tail with one '}|{' (every line whose keys and values lack the
+    sequence) splits there. A tail with more splits at the first
+    boundary whose tags prefix parses: canonical map<string,string>
+    JSON has no nested objects, so any earlier cut falls inside a key
+    or value, leaves an open string and parses to null. If no prefix
+    parses, the first boundary is used."""
     cut = f"instr({rest}, '}}|{{')"
+    pieces = f"split({rest}, '[}}][|][{{]')"  # regex for the literal '}|{'
+    cuts = (
+        f"transform(sequence(1, size({pieces}) - 1), "
+        f"i -> length(array_join(slice({pieces}, 1, i), '}}|{{')) + 1)"
+    )
+    parsing = (
+        f"get(filter({cuts}, p -> "
+        f"from_json(substring({rest}, 1, p), 'map<string,string>') IS NOT NULL), 0)"
+    )
+    # one CASE for the cut, shared by both maps; the slow branch runs
+    # only for tails with a second '}|{'
+    pos = (
+        f"CASE WHEN locate('}}|{{', {rest}, {cut} + 1) = 0 THEN {cut} "
+        f"ELSE coalesce({parsing}, {cut}) END"
+    )
     return (
-        _json_map(f"substring({rest}, 1, {cut})"),
-        _json_map(f"substr({rest}, {cut} + 2)"),
+        _json_map(f"substring({rest}, 1, {pos})"),
+        _json_map(f"substr({rest}, {pos} + 2)"),
     )
 
 
@@ -356,22 +376,10 @@ def extract_relations_sql(
     return _extract(pages, from_html, "OSMREL|", line_filter, fields, ["id"])
 
 
-def extract_all(pages: DataFrame, from_html: bool = True, engine: str = "sql"):
-    """One call -> (nodes, ways, relations).
-
-    engine='sql' (default): pure Catalyst expressions, whole-stage
-    codegen, no Python — the scale path. engine='pandas': the Arrow
-    UDF path (robust to '}|{' inside tag values; used for parity
-    testing and as the escape hatch).
-    """
-    if engine == "sql":
-        return (
-            extract_nodes_sql(pages, from_html),
-            extract_ways_sql(pages, from_html),
-            extract_relations_sql(pages, from_html),
-        )
+def extract_all(pages: DataFrame, from_html: bool = True):
+    """One call -> (nodes, ways, relations), extracted in SQL."""
     return (
-        extract_nodes(pages, from_html),
-        extract_ways(pages, from_html),
-        extract_relations(pages, from_html),
+        extract_nodes_sql(pages, from_html),
+        extract_ways_sql(pages, from_html),
+        extract_relations_sql(pages, from_html),
     )

@@ -43,7 +43,6 @@ def test_sql_handles_pipes_inside_node_tags(spark):
 
 
 def test_pandas_path_handles_pipes_in_way_tags(spark):
-    # the documented SQL-path limitation: '}|{'-free pipes still fine
     ways = [{"id": 7, "tags": {"note": "x|y"}, "info": {"k": "1"}, "refs": [1, 2]}]
     pages = P.pages_df(spark, P.entities_to_pages([], ways, []))
     for fn in (P.extract_ways, P.extract_ways_sql):
@@ -51,6 +50,39 @@ def test_pandas_path_handles_pipes_in_way_tags(spark):
         assert dict(row.tags) == {"note": "x|y"}
         assert dict(row.info) == {"k": "1"}
         assert list(row.refs) == [1, 2]
+
+
+@pytest.mark.parametrize("from_html", [True, False])
+def test_sql_splits_tags_and_info_with_brace_pipe_brace_inside(spark, from_html):
+    # '}|{' is also the boundary between the tags and info objects: a
+    # tag/info key or value holding it must not mis-split the line
+    odd = [
+        ({"k": "v", "name": "a}|{b"}, {"user": "x"}),  # in a tag value
+        ({"k": "v"}, {"user": "a}|{b}|{"}),  # in an info value
+        ({"a}|{": "}|{", "z": "{}"}, {"q": '"}|{"', "w": "}|{|"}),  # keys, quotes
+        ({"x": "y"}, {"v": "1"}),  # one boundary: the common case
+        ({}, {"v": "}|{"}),
+        ({"n": "}|{"}, {}),
+    ]
+    ways = [
+        {"id": i, "tags": t, "info": f, "refs": [1, i]} for i, (t, f) in enumerate(odd)
+    ]
+    rels = [
+        {"id": 100 + i, "tags": t, "info": f, "way_refs": [i], "stop_refs": [1]}
+        for i, (t, f) in enumerate(odd)
+    ]
+    pages = P.pages_df(spark, P.entities_to_pages([], ways, rels, 4))
+    for sql_fn, pd_fn in [
+        (P.extract_ways_sql, P.extract_ways),
+        (P.extract_relations_sql, P.extract_relations),
+    ]:
+        got = _rows(sql_fn(pages, from_html))
+        assert got == _rows(pd_fn(pages, from_html)), sql_fn.__name__
+        assert [(r["tags"], r["info"]) for r in got] == odd, sql_fn.__name__
+    line = 'OSMWAY|1|1,2|{"k":"v","name":"a}|{b"}|{"user":"x"}'
+    row = P.extract_ways_sql(P.pages_df(spark, [_page(line)]), from_html).collect()[0]
+    assert dict(row.tags) == {"k": "v", "name": "a}|{b"}
+    assert dict(row.info) == {"user": "x"}
 
 
 def _page(text):

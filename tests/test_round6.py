@@ -74,10 +74,11 @@ def test_minhash_broadcast_and_shuffle_verify_agree(spark):
 
 
 def test_stitch_many_matches_per_group(spark):
-    from osmptparser_spark.operators.stitch import (
-        _stitch_many,
-        _stitch_node_rows_group,
-    )
+    import hashlib
+    import json
+
+    from osmptparser_spark.operators import stitch_core as sc
+    from osmptparser_spark.operators.stitch import _stitch_many
 
     rng = np.random.default_rng(3)
     rows = []
@@ -96,16 +97,31 @@ def test_stitch_many_matches_per_group(spark):
                 )
     pdf = pd.DataFrame(rows).sample(frac=1.0, random_state=5)  # scramble
     got = _stitch_many(pdf, 150.0, False).sort_values("rel_id")
-    want = pd.concat(
-        [
-            _stitch_node_rows_group(g, 150.0, False)
-            for _, g in pdf.groupby("rel_id", sort=True)
-        ],
-        ignore_index=True,
-    ).sort_values("rel_id")
-    assert list(got["rel_id"]) == list(want["rel_id"])
-    for col in ["geometry", "node_seq", "status_code", "status_detail"]:
-        assert list(got[col]) == list(want[col]), col
+    # spec: stitch_core.flatten over each relation's ways in member order
+    want = []
+    for rel, g in pdf.sort_values(["way_pos", "node_pos"]).groupby("rel_id", sort=True):
+        ways = [
+            list(zip(w["node_id"], w["lat"], w["lon"]))
+            for _, w in g.groupby("way_pos", sort=True)
+        ]
+        geom, (code, detail) = sc.flatten(ways, 150.0, False)
+        want.append(
+            [
+                rel,
+                [[{"lon": n[2], "lat": n[1]} for n in seg] for seg in geom],
+                [[n[0] for n in seg] for seg in geom],
+                code,
+                detail,
+            ]
+        )
+    cols = ["rel_id", "geometry", "node_seq", "status_code", "status_detail"]
+    have = [[c.item() if hasattr(c, "item") else c for c in r] for r in got[cols].values]
+    assert have == want
+    # pinned from the removed per-group applyInPandas stitch
+    blob = json.dumps(have, sort_keys=True)
+    assert hashlib.sha256(blob.encode()).hexdigest() == (
+        "c55bb0a88780fe83bf06b93f85f2144e677af8fa44a817c74f9270275aff7d63"
+    )
 
 
 def test_extraction_empty_map_fast_path(spark):

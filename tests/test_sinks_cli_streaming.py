@@ -96,6 +96,56 @@ class TestCli:
         docs = sorted((json.loads(l)["properties"]["id"] for l in lines))
         assert docs == [85965, 2030162]
 
+    @pytest.mark.parametrize(
+        "city, mode",
+        [
+            ("fixture", ["--filter-ptv2", "--gap", "1500"]),
+            ("fixture", ["--filter", "area=yes"]),
+            ("area_city", ["--filter", "name&landuse=park"]),
+        ],
+    )
+    def test_cli_pages_mode_matches_get(self, spark, tmp_path, city, mode):
+        # pages input goes through routes_from_pages / areas_from_pages
+        # (line prefilter + relation cache); the GeoJSON must equal the
+        # get_* output over the same pages' extracted entities
+        import __spark_entry__ as entry
+        from osmptparser_spark import cli
+        from osmptparser_spark.engine import get_areas, get_public_transports
+        from osmptparser_spark.functions.tagfilter import PTV2_FILTER
+        from osmptparser_spark.sources import pages as P
+        from osmptparser_spark.sources.geojson import (
+            area_geojson,
+            public_transport_geojson,
+        )
+        from tests.fixture_util import load_entities
+
+        if city == "fixture":
+            data = load_entities()
+            ents = (data["nodes"], data["ways"], data["relations"])
+        else:
+            ents = entry._area_city_entities()
+        pages = P.pages_df(spark, P.entities_to_pages(*ents, 10))
+        inp, outp = str(tmp_path / "pages.parquet"), str(tmp_path / "out")
+        pages.write.parquet(inp)
+        assert cli.main(mode + ["--input", inp, "--output", outp]) == 0
+        got = []
+        for f in sorted(os.listdir(outp)):
+            if f.startswith("part-"):
+                with open(os.path.join(outp, f)) as fh:
+                    got += [l.rstrip("\n") for l in fh if l.strip()]
+
+        frames = P.extract_all(spark.read.parquet(inp))
+        gap = float(mode[mode.index("--gap") + 1]) if "--gap" in mode else 150.0
+        if mode[0] == "--filter-ptv2":
+            want = public_transport_geojson(get_public_transports(*frames, gap, PTV2_FILTER))
+        else:
+            want = area_geojson(get_areas(*frames, gap, mode[1]))
+        want = [r.geojson for r in want.orderBy("id").collect()]
+        assert got == want and len(got) > 0
+        if city == "area_city":
+            kinds = {json.loads(l)["properties"]["id_type"] for l in got}
+            assert kinds == {"r", "w"}
+
 
 class TestMultimodal:
     def test_fake_decode_features(self, spark):

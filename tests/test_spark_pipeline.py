@@ -164,7 +164,7 @@ class TestCacheBarrierContract:
         return synth_pages_spark(spark, n_routes=n_routes, routes_per_task=10)
 
     def test_cache_barrier_contract(self, spark):
-        """The load-bearing cache (engine._barrier 'cache') must hold
+        """The load-bearing relation cache of the pages preamble must hold
         the PREFILTERED relation table only — O(matched relations),
         never O(pages). Assert the measured storage size via the RDD
         storage registry after materialization."""
@@ -186,24 +186,6 @@ class TestCacheBarrierContract:
         # this bound, so the assertion distinguishes the two regimes
         assert total_mb < 8.0, f"cached {total_mb:.1f} MB: barrier holds more than relations"
         spark.catalog.clearCache()
-
-    def test_local_checkpoint_barrier_same_result(self, spark):
-        from osmptparser_spark.engine import routes_from_pages
-        from osmptparser_spark.functions.tagfilter import PTV2_FILTER
-
-        pages = self._pages(spark)
-        a = routes_from_pages(pages, 150.0, PTV2_FILTER, barrier="cache")
-        b = routes_from_pages(pages, 150.0, PTV2_FILTER, barrier="localCheckpoint")
-        ka = sorted((r.id, r.status_code) for r in a.select("id", "status_code").collect())
-        kb = sorted((r.id, r.status_code) for r in b.select("id", "status_code").collect())
-        assert ka == kb and len(ka) > 0
-        spark.catalog.clearCache()
-
-    def test_unknown_barrier_rejected(self, spark):
-        from osmptparser_spark.engine import routes_from_pages
-
-        with pytest.raises(ValueError, match="barrier"):
-            routes_from_pages(self._pages(spark), 150.0, None, barrier="bogus")
 
 
 class TestParMap:
